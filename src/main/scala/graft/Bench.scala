@@ -174,12 +174,15 @@ object Bench {
     // Locale.ROOT: the f-interpolator honours the JVM default locale, which
     // could print "0,123" and corrupt the JSON.
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    // worst mid-run segment: a load burst that lands between the bracket
+    // canaries still shows in the short line
+    val segMax = segCanaries.map(_ / LoadCanary.referenceSec).maxOption.getOrElse(0.0)
     def render(entries: Seq[(String, Double)], omitted: Int): String = {
       val qs = entries.map { case (k, v) => "\"" + k + "\":" + f3(v) }
         .mkString("{", ",", "}")
       val omit = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
       val fail = if (failedQueries > 0) s""","queries_failed":$failedQueries""" else ""
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","canary_sec":${f3(canary)},"canary_ratio":${f3(canaryRatio)},"canary_cpu_ratio":${f3(cpuRatio)},"canary_bw_ratio":${f3(bwRatio)},"steal_ratio":${f3(stealRatio)},"queries":$qs$omit$fail,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","canary_sec":${f3(canary)},"canary_ratio":${f3(canaryRatio)},"canary_cpu_ratio":${f3(cpuRatio)},"canary_bw_ratio":${f3(bwRatio)},"canary_seg_max":${f3(segMax)},"steal_ratio":${f3(stealRatio)},"queries":$qs$omit$fail,"sf":"$sfDir"}"""
     }
     // The harness captures only the last ~2000 chars of stdout and parses the
     // JSON out of that tail; sbt's own "[success] Total time..." trailer also
@@ -213,7 +216,11 @@ object Bench {
       .mkString("{", ",", "}")
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","canary_sec":$canary,"canary_ratio":$canaryRatio,"canary_cpu_ratio":$cpuRatio,"canary_bw_ratio":$bwRatio,"canary_bw_sec":$bwCanary,"canary_bw_ref_sec":${LoadCanary.bandwidthReferenceSec},"canary_ref_sec":${LoadCanary.referenceSec},"canary_start_sec":$canaryStart,"canary_end_sec":$canaryEnd,"norm_total":$normTotal,"queries_failed":$failedQueries,"steal_ratio":$stealRatio,"canary_segments":$segJson,"queries":$fullQs,"queries_norm":$normQs,"queries_steal_jiffies":$stealQs$gcJson,"sf":"$sfDir"}"""
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    // one file per run (cpus + UTC write time): back-to-back
+    // runs, e.g. an A/B pair, must not overwrite each other's full map
+    val stamp = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss")
+      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench_out_c${cpus}_$stamp.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), fullLine + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $out: $e") }
     spark.stop()

@@ -8,22 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * @param oracle equivalent ANSI SQL for the DuckDB oracle over the same
   *               parquet tables; None → driver records a rows-only check.
   *               Column names MUST match the Spark result exactly.
-  * @param build  the Spark-side implementation, (session, sfDir) => result
+  * @param run    the Spark-side implementation, (session, sfDir) => result
   */
 final case class QueryDef(
     name: String,
     oracle: Option[String],
-    build: (SparkSession, String) => DataFrame) {
-
-  /** The driver-facing entry point: [[build]], routed through the
-    * analyzed-plan memo for the queries [[PlanMemo]] covers (pure plan
-    * constructions only — every memoized run still optimizes, plans,
-    * codegens and EXECUTES from scratch; see [[PlanMemo]] for the
-    * safety contract and its enforcement).
-    */
-  def run(spark: SparkSession, sfDir: String): DataFrame =
-    PlanMemo.run(this, spark, sfDir)
-}
+    run: (SparkSession, String) => DataFrame)
 
 object QueryCatalog {
   /** All registered queries, in registration order. Modules contribute here;

@@ -62,6 +62,52 @@ private[graft] object HadoopIo {
     finally out.close()
   }
 
+  /** Data files under `dir`, recursively (names starting `_` or `.` are
+    * commit markers and checksums, not data).
+    */
+  private def dataFileCount(fs: FileSystem, dir: Path): Int = {
+    val it = fs.listFiles(dir, true)
+    var n = 0
+    while (it.hasNext) {
+      val name = it.next().getPath.getName
+      if (!name.startsWith("_") && !name.startsWith(".")) n += 1
+    }
+    n
+  }
+
+  /** Rewrites directory `dir` through a sibling swap: `write` produces
+    * the new content at `_compact_tmp_<name>`, the original is renamed
+    * aside to `_compact_old_<name>`, the temp is renamed in, and the old
+    * copy is dropped. Debris of both names left by a crashed earlier run
+    * is deleted first: Hadoop's rename moves `dir` INTO an existing
+    * `_compact_old_<name>`, so a failed rename-in would otherwise restore
+    * the stale tree. The only window where `dir` is unreadable is
+    * between the two renames, so callers must be single-owner offline
+    * maintenance. A failed rename-in restores the original. `caller`
+    * names the operation in error messages. Returns (data files before,
+    * data files after); no-op (0, 0) when `dir` is absent.
+    */
+  def swapRewrite(spark: SparkSession, dir: String, caller: String)(
+      write: String => Unit): (Int, Int) = {
+    val f = fs(spark, dir)
+    val dirPath = new Path(dir)
+    if (!f.exists(dirPath)) return (0, 0)
+    val before = dataFileCount(f, dirPath)
+    val tmp = new Path(dirPath.getParent, s"_compact_tmp_${dirPath.getName}")
+    val old = new Path(dirPath.getParent, s"_compact_old_${dirPath.getName}")
+    if (f.exists(tmp)) f.delete(tmp, true)
+    if (f.exists(old)) f.delete(old, true)
+    write(tmp.toString)
+    require(f.rename(dirPath, old), s"$caller: could not move $dir aside")
+    if (!f.rename(tmp, dirPath)) {
+      f.rename(old, dirPath) // best-effort restore of the original
+      throw new IllegalStateException(
+        s"$caller: could not move compacted data into $dir (original restored)")
+    }
+    f.delete(old, true)
+    (before, dataFileCount(f, dirPath))
+  }
+
   /** Recursive delete; no-op when absent. */
   def delete(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)

@@ -1,6 +1,5 @@
 package graft.hep
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import Schemas._
@@ -33,62 +32,32 @@ object HepMaintenance {
       spark: SparkSession, storePath: String, table: String,
       maxRecordsPerFile: Long = 0L): (Int, Int) = {
     val dir = s"$storePath/$table"
-    val fs = HadoopIo.fs(spark, dir)
-    val dirPath = new Path(dir)
-    if (!fs.exists(dirPath)) return (0, 0)
-
-    def dataFileCount(p: Path): Int = {
-      val it = fs.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) n += 1
-      }
-      n
+    HadoopIo.swapRewrite(spark, dir, "compact") { tmp =>
+      val df = spark.read.parquet(dir)
+      // only the layout the writer itself uses: (process, chunk) for the
+      // per-event tables; the processes table stays unpartitioned (a
+      // process-only partitioning would silently change its layout)
+      val partCols =
+        if (Seq("process", "chunk").forall(df.columns.contains))
+          Seq("process", "chunk")
+        else Nil
+      // restore intra-file ordering after the shuffle: the writer's natural
+      // event_id(+idx) order is what gives parquet row-group min/max stats
+      // their point-lookup skipping power; a bare repartition would
+      // interleave events within the compacted file and widen every
+      // row-group's event_id range to the whole chunk
+      val sortCols = Seq("event_id", "idx").filter(df.columns.contains).map(col)
+      val clustered =
+        if (partCols.nonEmpty) {
+          val r = df.repartition(partCols.map(col): _*)
+          if (sortCols.nonEmpty) r.sortWithinPartitions(sortCols: _*) else r
+        } else df.coalesce(1)
+      val writer = clustered
+        .write.mode(SaveMode.Overwrite)
+        .option("maxRecordsPerFile", maxRecordsPerFile)
+      (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
+        .parquet(tmp)
     }
-
-    val before = dataFileCount(dirPath)
-    val df = spark.read.parquet(dir)
-    // only the layout the writer itself uses: (process, chunk) for the
-    // per-event tables; the processes table stays unpartitioned (a
-    // process-only partitioning would silently change its layout)
-    val partCols =
-      if (Seq("process", "chunk").forall(df.columns.contains))
-        Seq("process", "chunk")
-      else Nil
-    val tmp = new Path(s"$storePath/_compact_tmp_$table")
-    val old = new Path(s"$storePath/_compact_old_$table")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) fs.delete(old, true)
-
-    // restore intra-file ordering after the shuffle: the writer's natural
-    // event_id(+idx) order is what gives parquet row-group min/max stats
-    // their point-lookup skipping power; a bare repartition would
-    // interleave events within the compacted file and widen every
-    // row-group's event_id range to the whole chunk
-    val sortCols = Seq("event_id", "idx").filter(df.columns.contains).map(col)
-    val clustered =
-      if (partCols.nonEmpty) {
-        val r = df.repartition(partCols.map(col): _*)
-        if (sortCols.nonEmpty) r.sortWithinPartitions(sortCols: _*) else r
-      } else df.coalesce(1)
-    val writer = clustered
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-      .parquet(tmp.toString)
-
-    // swap: the only window where the table is unreadable is between the
-    // two renames — single-owner maintenance, like the writer itself
-    require(fs.rename(dirPath, old), s"compact: could not move $dir aside")
-    if (!fs.rename(tmp, dirPath)) {
-      fs.rename(old, dirPath) // best-effort restore of the original
-      throw new IllegalStateException(
-        s"compact: could not move compacted data into $dir (original restored)")
-    }
-    fs.delete(old, true)
-    (before, dataFileCount(dirPath))
   }
 
   /** Compacts every member table of the store. */

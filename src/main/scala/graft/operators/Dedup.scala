@@ -129,39 +129,6 @@ object Dedup {
       .select(least(col("x"), col("y")).as("doc_a") +:
         greatest(col("x"), col("y")).as("doc_b") +: payload.map(col): _*)
 
-  /** Per-doc minhash signature columns m0..m7 over DISTINCT word-trigram
-    * shingles.
-    *
-    * Layout choices, each load-bearing for performance:
-    *   - explode + projection md5 (codegen'd) rather than array-lambda md5:
-    *     higher-order-function lambdas evaluate interpreted, and Catalyst's
-    *     projection collapse additionally inlines (= recomputes) a shared
-    *     hash array into all 8 signature expressions;
-    *   - the min-aggregate runs over BIGINT (hex slice via conv), not
-    *     strings — string buffers force SortAggregate, long buffers get
-    *     map-side-combined HashAggregate. min(long) picks the same shingle
-    *     as min(fixed-width-hex); the long is converted back to padded hex
-    *     afterwards so band keys equal the oracle's strings.
-    *   - the 8 signatures are 8-hex-char (32-bit) slices of TWO md5
-    *     digests per shingle, not 8 separate hashes — 4× fewer md5 calls
-    *     for the same LSH behavior.
-    */
-  private def minhashSigs(doc: DataFrame): DataFrame =
-    minhashSigsTuned(doc, SIGS)
-
-  /** [[minhashSigs]] generalized to `numSigs` signature slots: each md5
-    * digest yields four 32-bit slices, so ⌈numSigs/4⌉ digests per shingle
-    * (digest 0 = md5(s), digest 1 = md5("s:"+s) — kept verbatim so the
-    * 8-sig oracle path is byte-identical — digest j≥2 = md5("s<j>:"+s)).
-    */
-  private[operators] def minhashSigsTuned(doc: DataFrame, numSigs: Int): DataFrame =
-    minhashSigsKeyed(doc, numSigs, "doc_id")
-
-  /** [[minhashSigsTuned]] over an arbitrary grouping key: MinHash is a
-    * MERGEABLE sketch (min composes), so grouping by `source` instead of
-    * `doc_id` yields corpus-level per-source signatures in one pass —
-    * the d16 cross-source overlap estimator rides this.
-    */
   /** MinHash signatures from ANY (key, s) shingle relation — the digest +
     * min-aggregate stage shared by the word-trigram pipeline
     * ([[minhashSigsKeyed]]) and the char-5-gram one (d20). Duplicate
@@ -187,6 +154,33 @@ object Dedup {
         expr(s"lpad(lower(conv(ml$k, 10, 16)), 8, '0')").as(s"m$k")): _*)
   }
 
+  /** MinHash signature columns m0..m{numSigs−1} over word-trigram
+    * shingles, one row per `key` value (`doc_id` for per-doc signatures).
+    *
+    * Layout choices, each load-bearing for performance:
+    *   - explode + projection md5 (codegen'd) rather than array-lambda md5:
+    *     higher-order-function lambdas evaluate interpreted, and Catalyst's
+    *     projection collapse additionally inlines (= recomputes) a shared
+    *     hash array into all 8 signature expressions;
+    *   - the min-aggregate runs over BIGINT (hex slice via conv), not
+    *     strings — string buffers force SortAggregate, long buffers get
+    *     map-side-combined HashAggregate. min(long) picks the same shingle
+    *     as min(fixed-width-hex); the long is converted back to padded hex
+    *     afterwards so band keys equal the oracle's strings.
+    *   - the 8 signatures are 8-hex-char (32-bit) slices of TWO md5
+    *     digests per shingle, not 8 separate hashes — 4× fewer md5 calls
+    *     for the same LSH behavior.
+    *
+    * Each md5 digest yields four 32-bit slices, so ⌈numSigs/4⌉ digests
+    * per shingle (digest 0 = md5(s), digest 1 = md5("s:"+s) — kept
+    * verbatim so the 8-sig oracle path is byte-identical — digest j≥2 =
+    * md5("s<j>:"+s)).
+    *
+    * MinHash is a MERGEABLE sketch (min composes), so grouping by
+    * `source` instead of `doc_id` yields corpus-level per-source
+    * signatures in one pass — the d16 cross-source overlap estimator
+    * rides this.
+    */
   private[operators] def minhashSigsKeyed(
       doc: DataFrame, numSigs: Int, key: String): DataFrame = {
     // double-md5 per shingle is CPU-dense enough that scan parallelism
@@ -225,16 +219,6 @@ object Dedup {
   private[operators] def lshCandidates(doc: DataFrame): DataFrame =
     lshCandidatesTuned(doc, SIGS, BANDS)
 
-  /** [[lshCandidates]] with a USER-TUNED banding: `numBands` bands of
-    * `numSigs / numBands` rows. The (bands, rows) pair is the
-    * recall/precision dial of MinHash LSH — the capture probability of a
-    * pair with Jaccard J is 1 − (1 − J^rows)^bands — and the d11 accuracy
-    * audit exists precisely to calibrate it on the corpus before a
-    * production run commits to a setting. (numSigs, numBands) = (8, 2)
-    * reproduces the registered d03 pipeline exactly. Same scale shape at
-    * any setting: per-row signatures, band equi-join moving only
-    * (band, id) pairs, merge hint so both sides reuse one exchange.
-    */
   /** Band planner for [[lshCandidatesTuned]]: given a signature budget and
     * the Jaccard threshold the pipeline confirms at, pick the (bands,
     * rows-per-band) split minimizing total expected error mass around the
@@ -272,6 +256,16 @@ object Dedup {
     (b, numSigs / b)
   }
 
+  /** [[lshCandidates]] with a USER-TUNED banding: `numBands` bands of
+    * `numSigs / numBands` rows. The (bands, rows) pair is the
+    * recall/precision dial of MinHash LSH — the capture probability of a
+    * pair with Jaccard J is 1 − (1 − J^rows)^bands — and the d11 accuracy
+    * audit exists precisely to calibrate it on the corpus before a
+    * production run commits to a setting. (numSigs, numBands) = (8, 2)
+    * reproduces the registered d03 pipeline exactly. Same scale shape at
+    * any setting: per-row signatures, band equi-join moving only
+    * (band, id) pairs, merge hint so both sides reuse one exchange.
+    */
   def lshCandidatesTuned(
       doc: DataFrame, numSigs: Int, numBands: Int): DataFrame = {
     require(numSigs > 0 && numBands > 0 && numSigs % numBands == 0,
@@ -321,7 +315,8 @@ object Dedup {
     */
   private[operators] def bandKeys(
       doc: DataFrame, numSigs: Int, numBands: Int): DataFrame =
-    bandsFromSig(minhashSigsTuned(doc, numSigs), numBands, numSigs / numBands)
+    bandsFromSig(minhashSigsKeyed(doc, numSigs, "doc_id"), numBands,
+      numSigs / numBands)
 
   /** Distinct word-trigram shingle ARRAY per doc: (doc_id, arr). Pure
     * row-local map; the pre-explode stage shared by [[trigrams]] and the
@@ -1353,7 +1348,7 @@ object Dedup {
     */
   private def minhashOracleCtesTuned(numSigs: Int, numBands: Int): String = {
     val nDigests = (numSigs + 3) / 4
-    // digest j of [[minhashSigsTuned]] is h{j+1} here: h1 = md5(s),
+    // digest j of [[minhashSigsKeyed]] is h{j+1} here: h1 = md5(s),
     // h2 = md5('s:'||s) (kept verbatim so the 8-sig path is
     // byte-identical to the original d03/d11 oracle), h{j+1} = md5('sj:'||s)
     val digests = (0 until nDigests).map {
@@ -1484,7 +1479,7 @@ object Dedup {
         Tables.documents(s, d).select(col("doc_id"), col("text")))
       // d03's codegen'd signature pipeline, one corpus pass (merge hint:
       // both band sides reuse the same exchange)
-      val sig = minhashSigs(base)
+      val sig = minhashSigsKeyed(base, SIGS, "doc_id")
       val rows = SIGS / BANDS
       val bandArr = array((0 until BANDS).map { b =>
         struct(lit(b).as("band_idx"),

@@ -367,46 +367,23 @@ object DocStream {
     * batch, so a long-lived loop leaves thousands of tiny files — the
     * classic scan killer (per-file open/footer cost, starved vectorized
     * reads, driver-side listing bloat). Rewrites the index to
-    * ~`targetBytesPerFile` files via a shuffle-free coalesce and the same
-    * Hadoop-FS swap contract as `hep.HepMaintenance.compact` (write temp
-    * → rename aside → rename in; single-owner, run between batches —
-    * exactly the offline compaction window the ingest scaladoc reserves).
+    * ~`targetBytesPerFile` files via a shuffle-free coalesce and the
+    * Hadoop-FS swap `hep.HepMaintenance.compact` also uses
+    * (`hep.HadoopIo.swapRewrite`: write temp → rename aside → rename in;
+    * single-owner, run between batches — exactly the offline compaction
+    * window the ingest scaladoc reserves).
     * Content is byte-identical, so carried [[graft.operators.Dedup
     * .IndexScreen]]s stay exactly valid. Returns (filesBefore,
     * filesAfter).
     */
   def compactIndex(spark: SparkSession, indexDir: String,
       targetBytesPerFile: Long = 128L << 20): (Int, Int) = {
-    val fs = graft.hep.HadoopIo.fs(spark, indexDir)
-    val dirPath = new org.apache.hadoop.fs.Path(indexDir)
-    if (!fs.exists(dirPath)) return (0, 0)
-    def dataFileCount(p: org.apache.hadoop.fs.Path): Int = {
-      val it = fs.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) {
-        val name = it.next().getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) n += 1
-      }
-      n
+    graft.hep.HadoopIo.swapRewrite(spark, indexDir, "compactIndex") { tmp =>
+      val bytes = graft.hep.HadoopIo.fs(spark, indexDir)
+        .getContentSummary(new org.apache.hadoop.fs.Path(indexDir)).getLength
+      val nFiles = math.max(1L, (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
+      spark.read.parquet(indexDir).coalesce(nFiles)
+        .write.mode("overwrite").parquet(tmp)
     }
-    val before = dataFileCount(dirPath)
-    val bytes = fs.getContentSummary(dirPath).getLength
-    val nFiles = math.max(1L, (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
-    val parent = dirPath.getParent
-    val name = dirPath.getName
-    val tmp = new org.apache.hadoop.fs.Path(parent, s"_compact_tmp_$name")
-    val old = new org.apache.hadoop.fs.Path(parent, s"_compact_old_$name")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) fs.delete(old, true)
-    spark.read.parquet(indexDir).coalesce(nFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(dirPath, old), s"compactIndex: could not move $indexDir aside")
-    if (!fs.rename(tmp, dirPath)) {
-      fs.rename(old, dirPath)
-      throw new IllegalStateException(
-        s"compactIndex: could not move compacted data into $indexDir (original restored)")
-    }
-    fs.delete(old, true)
-    (before, dataFileCount(dirPath))
   }
 }

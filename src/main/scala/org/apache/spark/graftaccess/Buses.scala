@@ -3,8 +3,8 @@ package org.apache.spark.graftaccess
 import org.apache.spark.SparkContext
 
 /** Compile-time access shim for `SparkContext.listenerBus` (private[spark]):
-  * lets the purity scanner / tests drain the async listener bus so that
-  * job-start counters observed around a plan construction are exact, not
+  * lets the chain profiler drain the async listener bus so that
+  * job counters observed around a plan construction are exact, not
   * racing event delivery.
   */
 object Buses {

@@ -61,4 +61,37 @@ class HepMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // store still opens and finalized counts hold
     assert(new HepReader(spark, dir).process("x").length == 8)
   }
+
+  test("compact clears both crash-debris siblings before it swaps") {
+    val dir = Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "hepcompact3").toString + "/store"
+    val w = new HepWriter(spark, dir, evtsPerChunk = 5)
+    val p = w.newProcess("proc")
+    for (e <- 0 until 20) {
+      val b = p.newEvent()
+      b.setPdg(Array.tabulate(3)(i => e * 10 + i))
+      p.commitEvent(b)
+    }
+    w.close()
+    // an earlier run that died mid-write leaves a partial temp; one that
+    // died after the rename-in leaves a full stale copy of the table
+    val table = java.nio.file.Paths.get(dir, "particles")
+    val tmp = java.nio.file.Paths.get(dir, "_compact_tmp_particles")
+    val old = java.nio.file.Paths.get(dir, "_compact_old_particles")
+    Files.createDirectories(tmp.resolve("process=0/chunk=0"))
+    Files.write(tmp.resolve("process=0/chunk=0/part-partial.parquet"),
+      Array[Byte](1, 2, 3))
+    val walk = Files.walk(table)
+    try walk.forEach(f => Files.copy(f, old.resolve(table.relativize(f))))
+    finally walk.close()
+
+    val beforeRows = spark.read.parquet(table.toString)
+      .orderBy("event_id", "idx").collect().map(_.toString).toSeq
+    val (before, after) = HepMaintenance.compact(spark, dir, "particles")
+    assert(after < before, s"file count not reduced: $before -> $after")
+    val afterRows = spark.read.parquet(table.toString)
+      .orderBy("event_id", "idx").collect().map(_.toString).toSeq
+    assert(afterRows == beforeRows)
+    assert(!Files.exists(tmp) && !Files.exists(old), "crash debris left behind")
+  }
 }
